@@ -64,12 +64,14 @@ def sql_query(
     one-shot :class:`DataSource` (reference signature's ``ds_kwargs=``,
     dfsql/__init__.py:12,22 — e.g. ``{"case_sensitive": False}``).
     Unlike the reference there is no CSV round-trip: pandas input
-    crosses to the JVM once via Arrow, Spark DataFrames are registered
-    as-is, and views are dropped afterwards.
+    crosses to the JVM once via Arrow and Spark DataFrames are
+    registered by plan, all in the one-shot DataSource's own session,
+    so concurrent calls that pass the same table name never see each
+    other's data.  That DataSource caches nothing unless ``ds_kwargs``
+    says otherwise.
     """
     if not table_dfs:
         raise DfsqlException("At least one table must be provided")
-    spark = spark or get_spark()
     word_re = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
     sql_words = {w.lower() for w in word_re.findall(sql)}
     for name in table_dfs:
@@ -78,11 +80,10 @@ def sql_query(
             raise DfsqlException(
                 f"Table {name} is not used in the query"
             )
-    ds = DataSource(spark=spark, **(ds_kwargs or {}))
+    ds = DataSource(spark=spark, **{"cache": False, **(ds_kwargs or {})})
     if custom_functions:
         for fname, fn in custom_functions.items():
             ds.register_function(fname, fn)
-    registered = []
     try:
         for name, df in table_dfs.items():
             if not isinstance(df, (pd.DataFrame, DataFrame)):
@@ -90,11 +91,10 @@ def sql_query(
                     f"Table {name} must be a pandas or Spark DataFrame"
                 )
             ds.add_table(name, df)
-            registered.append(name)
         return ds.query(sql, reduce_output=reduce_output)
     finally:
-        for name in registered:
-            spark.catalog.dropTempView(name)
+        # views go with ds's session; a pin in the shared cache would not
+        ds.cache.clear(ds.spark)
 
 
 # importing the package registers the pandas ``.sql`` accessor

@@ -36,13 +36,10 @@ from .sources.tables import TableInfo, read_file
 
 METADATA_FILE = "datasource_tables.json"
 
-# ``spark.sql.caseSensitive`` is session-global; the per-query
-# set/analyze/restore window in ``_sql`` must not interleave across
-# threads, or a query can analyze under another DataSource's
-# sensitivity (and restore a stale value).  One process-wide lock:
-# sessions are a process-level resource and the guarded window is only
-# parse+analyze (execution happens outside it), so contention is
-# negligible next to query runtime.
+# Nothing acquires this lock (or extensions._ACCESSOR_VIEW_LOCK): each
+# DataSource owns its session.  The benchmark tracer names both in
+# perfbench/trace.py's LOCK_TARGETS; the benchmark change that drops
+# LOCK_TARGETS drops them too.
 _CASE_SENSITIVITY_LOCK = threading.Lock()
 
 
@@ -61,9 +58,17 @@ __all__ = [
 class DataSource:
     """Named-table catalog with a SQL entry point.
 
+    Each DataSource runs on a child of the given session
+    (``spark.newSession()``): its tables, UDFs and case sensitivity
+    are private to it, and the caller's session is never changed.  The
+    child shares the SparkContext and the table cache, and carries
+    the caller's runtime SQL conf as of construction.  ``query_df``
+    results belong to the child session (``ds.spark``).
+
     Parameters
     ----------
-    spark : optional existing SparkSession (one is built if omitted)
+    spark : optional existing SparkSession (one is built if omitted);
+        the DataSource's own session is a child of it
     metadata_dir : optional directory for JSON catalog persistence
         (reference: base_data_source.py:118-146)
     case_sensitive : column/table lookup case sensitivity
@@ -84,7 +89,7 @@ class DataSource:
         from .cache import DoNothingCache, MemoryCache
         from .config import Configuration
 
-        self.spark = spark or get_spark()
+        self.spark = _child_session(spark or get_spark())
         self.metadata_dir = metadata_dir
         if cache is True:
             self.cache = MemoryCache()
@@ -94,13 +99,12 @@ class DataSource:
             self.cache = cache
         self.tables: dict[str, TableInfo] = {}
         self.function_registry = FunctionRegistry(self.spark)
-        # Per-DataSource, applied per-query (see _sql): two DataSources
-        # with different settings can share one SparkSession without
-        # silently changing each other's name resolution.  Default comes
-        # from Configuration (env-overridable), reference default True.
+        # Set once on the DataSource's own session.  Default comes from
+        # Configuration (env-overridable), reference default True.
         self.case_sensitive = (
             Configuration.CASE_SENSITIVE if case_sensitive is None else case_sensitive
         )
+        self.spark.conf.set("spark.sql.caseSensitive", str(self.case_sensitive).lower())
         if metadata_dir and os.path.exists(os.path.join(metadata_dir, METADATA_FILE)):
             self.load_metadata()
 
@@ -146,11 +150,23 @@ class DataSource:
         an implementation artifact we deliberately do not reproduce)."""
         if isinstance(df, pd.DataFrame):
             df = self.spark.createDataFrame(df)
+        elif df.sparkSession is not self.spark:
+            df = self._rebind(df)
         df.createOrReplaceTempView(name)
         old = self._resolve_name(name)
         self.cache.evict(self.spark, old)
         self.tables.pop(old, None)
         self.tables[name] = TableInfo(name=name)
+
+    def _rebind(self, df: DataFrame) -> DataFrame:
+        """``df``, from another session, as a DataFrame of this one.
+        The analyzed plan moves over as it is: no job runs, no data
+        crosses to the driver, and a relation the caller cached still
+        reads as its ``InMemoryRelation`` (the cache is shared)."""
+        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            self.spark._jsparkSession, df._jdf.queryExecution().analyzed()
+        )
+        return DataFrame(jdf, self.spark)
 
     def drop_table(self, name: str) -> None:
         name = self._resolve_name(name)
@@ -288,26 +304,12 @@ class DataSource:
         """
         from pyspark.errors import AnalysisException, ParseException
 
-        # Scope case sensitivity to this query: spark.sql analyzes
-        # eagerly, so name resolution happens inside the set/restore
-        # window and the session-global conf is left untouched.  The
-        # lock keeps concurrent DataSources (sharing one session) from
-        # analyzing under each other's sensitivity.
-        with _CASE_SENSITIVITY_LOCK:
-            prev = self.spark.conf.get("spark.sql.caseSensitive")
-            self.spark.conf.set(
-                "spark.sql.caseSensitive", str(self.case_sensitive).lower()
-            )
-            try:
-                out = self.spark.sql(
-                    rewrite(sql, self.function_registry.name_map())
-                )
-            except ParseException as e:
-                raise SQLParsingException(str(e).split("\n")[0]) from e
-            except AnalysisException as e:
-                raise QueryExecutionException(str(e).split("\n")[0]) from e
-            finally:
-                self.spark.conf.set("spark.sql.caseSensitive", prev)
+        try:
+            out = self.spark.sql(rewrite(sql, self.function_registry.name_map()))
+        except ParseException as e:
+            raise SQLParsingException(str(e).split("\n")[0]) from e
+        except AnalysisException as e:
+            raise QueryExecutionException(str(e).split("\n")[0]) from e
         self._touch_referenced(sql)
         return out
 
@@ -362,6 +364,19 @@ class DataSource:
         if reduce_output:
             return _reduce_output(pdf)
         return pdf
+
+
+def _child_session(parent: SparkSession) -> SparkSession:
+    """A new session on ``parent``'s SparkContext and table cache, with
+    ``parent``'s SQL conf.  ``newSession()`` starts from the builder's
+    conf only, so runtime values the caller set with ``spark.conf.set``
+    are copied across, in the JVM, from a snapshot (``clone``) that a
+    concurrent ``spark.conf.set`` cannot change mid-copy."""
+    child = parent.newSession()
+    props = parent._jvm.java.util.Properties()
+    props.putAll(parent._jconf.clone().settings())
+    child._jconf.setConf(props)
+    return child
 
 
 def _path_size_bytes(path: str) -> int | None:

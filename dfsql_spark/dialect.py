@@ -332,7 +332,7 @@ def _in_cast(tokens: list[Token], as_idx: int) -> bool:
 
 def _rewrite_function_names(tokens: list[Token], fmap: dict[str, str]) -> list[Token]:
     """Rename call sites of registered custom functions to their
-    internal session names (``name(`` → ``dfsql_fN_name(``).
+    internal session names (``name(`` → ``dfsql_f_name(``).
 
     This is the per-DataSource function-scoping mechanism (reference
     resolves custom functions before builtins, per DataSource:

@@ -22,8 +22,7 @@ import pandas as pd
 
 from .dialect import tokenize
 
-# serializes accessor calls that register the shared `temp` view (see
-# PandasOnSparkSQLAccessor.__call__)
+# unused; kept for the benchmark tracer (see datasource._CASE_SENSITIVITY_LOCK)
 _ACCESSOR_VIEW_LOCK = threading.Lock()
 
 __all__ = ["maybe_add_from_to_query", "SQLAccessor"]
@@ -165,26 +164,15 @@ try:
             from .datasource import DataSource
 
             sdf = self._psdf.to_spark()
-            ds = DataSource(spark=sdf.sparkSession, cache=False)
             # The view name is part of the accessor contract (the SQL
-            # may say "FROM temp" explicitly), so it cannot be made
-            # unique per call.  The lock serializes register→analyze→
-            # drop within this process so two threads' accessor calls
-            # can't read each other's data; a pre-existing USER view of
-            # the same name is replaced and then dropped — the same
-            # clobber the pandas accessor / sql_query path has always
-            # had (the name is reserved by the API, documented).
-            with _ACCESSOR_VIEW_LOCK:
-                ds.add_table(from_table, sdf)
-                try:
-                    sql = maybe_add_from_to_query(sql, table_name=from_table)
-                    if reduce_output:
-                        return ds.query(sql, reduce_output=True)
-                    # analysis resolves the view eagerly here; after
-                    # this the plan no longer needs it
-                    out = ds.query_df(sql)
-                finally:
-                    ds.drop_table(from_table)
-            return out.pandas_api()
+            # may say "FROM temp" explicitly); it lives in this call's
+            # own DataSource session, so concurrent calls and the
+            # caller's own views never collide with it.
+            ds = DataSource(spark=sdf.sparkSession, cache=False)
+            ds.add_table(from_table, sdf)
+            sql = maybe_add_from_to_query(sql, table_name=from_table)
+            if reduce_output:
+                return ds.query(sql, reduce_output=True)
+            return ds.query_df(sql).pandas_api()
 except ImportError:  # pragma: no cover - pyspark.pandas needs pandas>=1.0
     pass

@@ -15,18 +15,18 @@ the Arrow fast path:
   reference's ``AggregateFunction.execute``.
 
 Scoping (reference parity): the reference resolves custom functions
-per-DataSource, *before* builtins (base_data_source.py:192-198).  Spark
-has no per-session-scope function namespaces, and Spark 4 resolves even
-DataFrame-API calls (``F.lower`` inside ``F.transform``) through the
-session function registry — so registering a UDF under a builtin's name
-session-wide breaks unrelated plans.  Instead, each registry registers
-its UDFs under a collision-proof *internal* session name
-(``dfsql_f<rid>_<name>``) and exposes :meth:`name_map`; the dialect
-rewriter renames function-call tokens in THIS DataSource's SQL to the
-internal names.  Result: ``register_function("lower", ...)`` shadows the
-builtin only inside this DataSource's queries, other DataSources and
-every DataFrame-API plan keep the builtin — the reference's scoping,
-with zero session-registry mutation of builtin names.
+per-DataSource, *before* builtins (base_data_source.py:192-198).  Each
+DataSource has its own Spark session, so its UDFs are private to it.
+They are still not registered under their public names: Spark 4
+resolves even DataFrame-API calls (``F.lower`` inside ``F.transform``)
+through the session function registry, so a ``lower`` UDF would replace
+the builtin in every plan of that session, ``query_df`` results
+included, and the ``POWER(``/``CONCAT(`` calls the dialect's own
+rewrites emit must keep reaching the builtins.  Instead each UDF is
+registered under an *internal* name (``dfsql_f_<name>``) that no builtin
+has, and :meth:`name_map` lets the dialect rewriter rename the call
+sites in this DataSource's SQL.  Result: ``register_function("lower",
+...)`` shadows the builtin only in this DataSource's SQL text.
 
 For DataFrame-API use of a custom function, use the wrapped UDF column
 function that ``register*`` returns (callable directly on columns).
@@ -34,7 +34,6 @@ function that ``register*`` returns (callable directly on columns).
 
 from __future__ import annotations
 
-import itertools
 import re
 from dataclasses import dataclass
 from typing import Callable
@@ -45,7 +44,6 @@ from pyspark.sql.functions import pandas_udf, udf
 from pyspark.sql.types import DataType, _parse_datatype_string
 
 _IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z_0-9]*$")
-_REGISTRY_IDS = itertools.count()
 
 
 def _as_datatype(t: "DataType | str") -> DataType:
@@ -148,18 +146,16 @@ class FunctionRegistry:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.functions: dict[str, RegisteredFunction] = {}
-        self._rid = next(_REGISTRY_IDS)
 
     def _internal_name(self, name: str) -> str:
-        """Collision-proof session-registry name for ``name``: unique
-        per registry instance, never equal to any builtin, so the
-        session function registry's builtin entries are never replaced."""
+        """Session-registry name for ``name``: never equal to any
+        builtin, so the session's builtin entries are never replaced."""
         if not _IDENT_RE.match(name):
             raise ValueError(
                 f"invalid function name {name!r}: must be an identifier "
                 "([A-Za-z_][A-Za-z_0-9]*)"
             )
-        return f"dfsql_f{self._rid}_{name.lower()}"
+        return f"dfsql_f_{name.lower()}"
 
     def name_map(self) -> dict[str, str]:
         """lowercase public name → internal session name, consumed by

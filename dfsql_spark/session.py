@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "configure", "DEFAULT_CONFS"]
+__all__ = ["get_spark", "DEFAULT_CONFS"]
 
 # Confs that define the engine's dialect + scale posture. Anything the
 # caller already set on an active session is left untouched.
@@ -98,16 +98,4 @@ def get_spark(app_name: str = "dfsql-spark", master: str | None = None) -> Spark
         str(Configuration.ARROW_ENABLED).lower(),
     )
     spark = builder.getOrCreate()
-    return spark
-
-
-def configure(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime-settable confs to an existing session."""
-    for key, value in DEFAULT_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # some confs are static (can't be set on a live session);
-            # those only matter at session creation time.
-            pass
     return spark

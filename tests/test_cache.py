@@ -17,7 +17,7 @@ def ds(spark):
     for i, name in enumerate(("ca", "cb", "cc")):
         ds.add_table(name, pd.DataFrame({"x": [i, i + 1, i + 2]}))
     yield ds
-    ds.cache.clear(spark)
+    ds.cache.clear(ds.spark)
     for name in ("ca", "cb", "cc"):
         spark.catalog.dropTempView(name)
 
@@ -28,7 +28,7 @@ def test_hit_miss_currsize(ds, spark):
     assert (c.hits, c.misses, c.currsize) == (0, 1, 1)
     ds.cache_table("ca")
     assert (c.hits, c.misses, c.currsize) == (1, 1, 1)
-    assert spark.catalog.isCached("ca")
+    assert ds.spark.catalog.isCached("ca")
 
 
 def test_lru_eviction_at_maxsize(ds, spark):
@@ -36,8 +36,8 @@ def test_lru_eviction_at_maxsize(ds, spark):
     ds.cache_table("cb")
     ds.cache_table("cc")  # evicts ca (least recently used)
     assert ds.cache.currsize == 2
-    assert not spark.catalog.isCached("ca")
-    assert spark.catalog.isCached("cb") and spark.catalog.isCached("cc")
+    assert not ds.spark.catalog.isCached("ca")
+    assert ds.spark.catalog.isCached("cb") and ds.spark.catalog.isCached("cc")
 
 
 def test_touch_refreshes_recency(ds, spark):
@@ -45,8 +45,8 @@ def test_touch_refreshes_recency(ds, spark):
     ds.cache_table("cb")
     ds.cache_table("ca")  # ca now most recent
     ds.cache_table("cc")  # evicts cb
-    assert spark.catalog.isCached("ca")
-    assert not spark.catalog.isCached("cb")
+    assert ds.spark.catalog.isCached("ca")
+    assert not ds.spark.catalog.isCached("cb")
 
 
 def test_do_nothing_cache(spark):
@@ -54,18 +54,18 @@ def test_do_nothing_cache(spark):
     assert isinstance(ds.cache, DoNothingCache)
     ds.add_table("cnone", pd.DataFrame({"x": [1]}))
     ds.cache_table("cnone")
-    assert not spark.catalog.isCached("cnone")
+    assert not ds.spark.catalog.isCached("cnone")
     assert ds.cache.currsize == 0
     spark.catalog.dropTempView("cnone")
 
 
 def test_set_cache_swaps_and_clears(ds, spark):
     ds.cache_table("ca")
-    assert spark.catalog.isCached("ca")
+    assert ds.spark.catalog.isCached("ca")
     ds.set_cache(DoNothingCache())
-    assert not spark.catalog.isCached("ca")
+    assert not ds.spark.catalog.isCached("ca")
     ds.cache_table("cb")
-    assert not spark.catalog.isCached("cb")
+    assert not ds.spark.catalog.isCached("cb")
 
 
 def test_cache_on_access(ds, spark):
@@ -76,15 +76,15 @@ def test_cache_on_access(ds, spark):
     c = ds.cache
     ds.query("SELECT sum(x) AS s FROM ca")
     assert (c.hits, c.misses) == (0, 1)
-    assert spark.catalog.isCached("ca")
+    assert ds.spark.catalog.isCached("ca")
     ds.query("SELECT sum(x) AS s FROM ca")
     assert (c.hits, c.misses) == (1, 1)
 
 
 def test_cache_on_access_only_referenced_tables(ds, spark):
     ds.query("SELECT x FROM cb WHERE x > 0")
-    assert spark.catalog.isCached("cb")
-    assert not spark.catalog.isCached("cc")
+    assert ds.spark.catalog.isCached("cb")
+    assert not ds.spark.catalog.isCached("cc")
 
 
 def test_cache_on_access_respects_do_nothing(spark):
@@ -92,7 +92,7 @@ def test_cache_on_access_respects_do_nothing(spark):
     ds.add_table("cq", pd.DataFrame({"x": [1]}))
     try:
         ds.query("SELECT x FROM cq")
-        assert not spark.catalog.isCached("cq")
+        assert not ds.spark.catalog.isCached("cq")
     finally:
         spark.catalog.dropTempView("cq")
 
@@ -111,16 +111,16 @@ def test_cache_on_access_size_gate(spark, tmp_path):
     try:
         Configuration.AUTO_CACHE_MAX_BYTES = 10  # smaller than the file
         ds.query("SELECT sum(x) AS s FROM gated_tbl")
-        assert not spark.catalog.isCached("gated_tbl")
+        assert not ds.spark.catalog.isCached("gated_tbl")
         assert ds.cache.misses == 0
         ds.cache_table("gated_tbl")  # explicit pin bypasses the gate
-        assert spark.catalog.isCached("gated_tbl")
+        assert ds.spark.catalog.isCached("gated_tbl")
         Configuration.AUTO_CACHE_MAX_BYTES = original_field  # default gate
         ds.query("SELECT sum(y) AS s FROM gated_tbl")
         assert ds.cache.hits == 1  # now under the default 1 GiB gate
     finally:
         Configuration.AUTO_CACHE_MAX_BYTES = original_field
-        ds.cache.clear(spark)
+        ds.cache.clear(ds.spark)
         spark.catalog.dropTempView("gated_tbl")
 
 

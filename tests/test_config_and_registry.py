@@ -305,8 +305,8 @@ def test_custom_function_shadows_builtin_scoped(spark):
         assert ds2.query("SELECT lower(x) FROM shadow_t2") == "abc"
         assert spark.sql("SELECT lower('AbC') AS r").collect()[0].r == "abc"
     finally:
-        spark.catalog.dropTempView("shadow_t")
-        spark.catalog.dropTempView("shadow_t2")
+        ds.spark.catalog.dropTempView("shadow_t")
+        ds2.spark.catalog.dropTempView("shadow_t2")
 
 
 def test_builtin_shadow_cannot_break_dataframe_api(spark):

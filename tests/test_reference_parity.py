@@ -38,9 +38,9 @@ def ds(spark):
     # (DataSource._touch_referenced -> MemoryCache.touch); drain them so
     # the module leaves the shared session's cache empty (the conftest
     # module-teardown assert enforces this for every test module).
-    ds.cache.clear(spark)
+    ds.cache.clear(ds.spark)
     for t in ("crew", "crew2"):
-        spark.catalog.dropTempView(t)
+        ds.spark.catalog.dropTempView(t)
 
 
 # ---------------------------------------------------------------- basics
@@ -255,17 +255,20 @@ def test_case_insensitive_column_lookup(spark):
         assert ds2.query("SELECT name FROM CAPS_TBL") == "x"
     finally:
         spark.conf.set("spark.sql.caseSensitive", "true")
-        spark.catalog.dropTempView("caps_tbl")
+        ds2.spark.catalog.dropTempView("caps_tbl")
 
 
 def test_case_sensitivity_scoped_per_datasource(spark):
-    """Two DataSources with different case_sensitive settings share one
-    SparkSession without clobbering each other: the conf is set/restored
-    around each query, never left mutated on the session."""
+    """Two DataSources with different case_sensitive settings on one
+    SparkSession do not clobber each other: each sets it on its own
+    child session, and the caller's session conf is never changed.
+    Each DataSource has its own table map (as in the reference), so
+    each registers the table itself."""
     prev = spark.conf.get("spark.sql.caseSensitive")
     ds_cs = DataSource(spark=spark, case_sensitive=True)
     ds_ci = DataSource(spark=spark, case_sensitive=False)
     ds_cs.add_table("scope_tbl", pd.DataFrame({"NaMe": ["x"]}))
+    ds_ci.add_table("scope_tbl", pd.DataFrame({"NaMe": ["x"]}))
     try:
         assert ds_ci.query("SELECT name FROM scope_tbl") == "x"
         with pytest.raises(QueryExecutionException):
@@ -273,7 +276,8 @@ def test_case_sensitivity_scoped_per_datasource(spark):
         # the interleaved queries above must leave the session conf as-is
         assert spark.conf.get("spark.sql.caseSensitive") == prev
     finally:
-        spark.catalog.dropTempView("scope_tbl")
+        for d in (ds_cs, ds_ci):
+            d.spark.catalog.dropTempView("scope_tbl")
 
 
 def test_backtick_identifier_multiword(spark):
@@ -283,7 +287,7 @@ def test_backtick_identifier_multiword(spark):
         out = ds2.query("SELECT `two words` FROM mw")
         assert out == 5
     finally:
-        spark.catalog.dropTempView("mw")
+        ds2.spark.catalog.dropTempView("mw")
 
 
 # -------------------------------------------------------- error paths
@@ -383,7 +387,7 @@ def test_case_insensitive_table_catalog_lookup(spark):
         ds.drop_table("Titanic_Ci")
         assert not ds.tables
     finally:
-        spark.catalog.dropTempView("titanic_ci")
+        ds.spark.catalog.dropTempView("titanic_ci")
         spark.conf.set("spark.sql.caseSensitive", "true")
 
 
@@ -414,7 +418,7 @@ def test_csv_int_with_nulls_dtype_divergence(spark, tmp_path):
     ds = DataSource(spark=spark)
     ds.add_table_from_file("people_nulls", str(p))
     try:
-        sdf = spark.table("people_nulls")
+        sdf = ds.spark.table("people_nulls")
         # engine-side: integer column, real NULL (not NaN, not string)
         assert dict(sdf.dtypes)["age"] == "int"
         assert sdf.filter("age IS NULL").count() == 1
@@ -491,9 +495,9 @@ def test_from_dir_registers_supported_files(spark, tmp_path):
         assert dsd.query("SELECT c FROM logs") == 7
         assert dsd.query("SELECT age FROM people WHERE name = 'ann'") == 30
     finally:
-        dsd.cache.clear(spark)
+        dsd.cache.clear(dsd.spark)
         for t in got:
-            spark.catalog.dropTempView(t)
+            dsd.spark.catalog.dropTempView(t)
 
 
 def test_with_provenance_names_the_shard(spark, tmp_path):

@@ -19,7 +19,7 @@ def ds(spark):
         ),
     )
     yield ds
-    spark.catalog.dropTempView("sink_src")
+    ds.spark.catalog.dropTempView("sink_src")
 
 
 def test_write_parquet_roundtrip(ds, tmp_path):
